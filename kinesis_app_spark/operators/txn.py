@@ -459,11 +459,6 @@ class VtTransaction:
             raise FileNotFoundError(f"table {table_dir} does not exist")
         manifest = VT._read_manifest(table_dir, latest)
         VT._check_protocol(manifest, table_dir, write=True)
-        if VT.vt_files(table_dir, latest) is None:
-            raise ValueError(
-                "txn append needs a file-level manifest (round-5+ "
-                "table); rewrite it (vt_optimize) first"
-            )
         if VT._table_constraints(manifest):
             raise ValueError(
                 "txn append cannot validate CHECK constraints; stage "
@@ -484,14 +479,14 @@ class VtTransaction:
             table_dir, new_version, mapping,
         )
 
-        def mk_manifest(parent, carried_now, version):
+        def mk_manifest(carried_now, version):
             out = {
                 "data_dir": data_dir,
                 "n_rows": VT._live_rows(carried_now + new_files),
-                "schema": manifest.get("schema"),
+                "schema": manifest["schema"],
                 "operation": "APPEND",
                 **VT._incremental_or_full(
-                    version, parent, carried_now, new_files, []
+                    version, carried_now, new_files, []
                 ),
             }
             if mapping is not None:
@@ -651,13 +646,7 @@ class VtTransaction:
             for _spin in range(_MAX_RESERVE_SPINS):
                 latest = VT.vt_latest_version(table_dir)
                 for v in range(validated_to + 1, latest + 1):
-                    delta = VT._commit_delta(table_dir, v)
-                    if delta is None:
-                        raise TxnAbortedError(
-                            f"txn {self.txn_id}: version {v} of "
-                            f"{table_dir} has no file-level metadata"
-                        )
-                    added, removed = delta
+                    added, removed = VT._commit_delta(table_dir, v)
                     hit = removed & s["t_paths"]
                     if hit:
                         raise TxnAbortedError(
@@ -704,7 +693,7 @@ class VtTransaction:
                     )
                 os.replace(mk_tmp, mk)
                 try:
-                    m = s["mk_manifest"](parent_files, carried, version)
+                    m = s["mk_manifest"](carried, version)
                     m["txn"] = self.txn_id  # audit lineage in HISTORY
                     VT._commit(table_dir, version, m)
                     out[table_dir] = version

@@ -124,7 +124,7 @@ def _conn_opts(options) -> dict:
         # backlog in bounded batches instead of making micro-batch 1 the
         # entire retained stream (the reference's configRecordBatch,
         # src/Kinesis/Types.hs:79-80, re-expressed for time bounds).
-        # 0 = unbounded (the pre-round-5 behavior). Use with
+        # 0 = unbounded (one batch takes the whole backlog). Use with
         # processingTime triggers: Trigger.AvailableNow pins its drain
         # target from the FIRST latestOffset, which a cap bounds to one
         # window — the cap is for continuous tails, not one-shot drains.

@@ -16,7 +16,7 @@ Structured Streaming configuration:
   Types.hs:133-142) -> StreamingQueryListener (see monitor).
 """
 
-from kinesis_app_spark.streaming.runner import StreamRunner, run_stream
+from kinesis_app_spark.streaming.runner import StreamRunner
 from kinesis_app_spark.streaming.sources import (
     file_stream,
     kinesis_stream_reader,
@@ -26,7 +26,6 @@ from kinesis_app_spark.streaming.monitor import ClusterStateListener, StatsRepor
 
 __all__ = [
     "StreamRunner",
-    "run_stream",
     "file_stream",
     "kinesis_stream_reader",
     "rate_stream",

@@ -22,7 +22,7 @@ from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Row
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 #: the Processor type: called once per micro-batch epoch with the batch
 #: DataFrame and the epoch id. Epoch commit = ack.
@@ -37,6 +37,23 @@ class StreamRunner:
     """Builds and starts checkpointed streaming queries."""
 
     checkpoint_dir: str
+
+    def _start(
+        self,
+        writer: DataStreamWriter,
+        available_now: bool,
+        trigger_interval: str | None,
+    ) -> StreamingQuery:
+        """Checkpoint the query under ``checkpoint_dir`` and start it:
+        ``available_now`` drains everything then stops (the deterministic
+        test trigger); ``trigger_interval`` paces micro-batches (the
+        reference's masterLoop tick / 1 s poll)."""
+        writer = writer.option("checkpointLocation", self.checkpoint_dir)
+        if available_now:
+            writer = writer.trigger(availableNow=True)
+        elif trigger_interval:
+            writer = writer.trigger(processingTime=trigger_interval)
+        return writer.start()
 
     def run(
         self,
@@ -53,19 +70,12 @@ class StreamRunner:
             df.writeStream.outputMode(output_mode)
             .format(sink_format)
             .queryName(query_name)
-            .option("checkpointLocation", self.checkpoint_dir)
         )
         if path:
             writer = writer.option("path", path)
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        if available_now:
-            # drain-everything-then-stop: the deterministic test trigger
-            writer = writer.trigger(availableNow=True)
-        elif trigger_interval:
-            # reference: masterLoop tick / 1 s poll pacing
-            writer = writer.trigger(processingTime=trigger_interval)
-        return writer.start()
+        return self._start(writer, available_now, trigger_interval)
 
     def run_processor(
         self,
@@ -81,14 +91,9 @@ class StreamRunner:
         writer = (
             df.writeStream.outputMode(output_mode)
             .queryName(query_name)
-            .option("checkpointLocation", self.checkpoint_dir)
             .foreachBatch(processor)
         )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        elif trigger_interval:
-            writer = writer.trigger(processingTime=trigger_interval)
-        return writer.start()
+        return self._start(writer, available_now, trigger_interval)
 
     def run_record_processor(
         self,
@@ -131,21 +136,5 @@ class StreamRunner:
                 if close_fn is not None:
                     close_fn(error)
 
-        writer = (
-            df.writeStream.queryName(query_name)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .foreach(_Writer())
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        elif trigger_interval:
-            writer = writer.trigger(processingTime=trigger_interval)
-        return writer.start()
-
-
-def run_stream(
-    df: DataFrame,
-    checkpoint_dir: str,
-    **kwargs,
-) -> StreamingQuery:
-    return StreamRunner(checkpoint_dir).run(df, **kwargs)
+        writer = df.writeStream.queryName(query_name).foreach(_Writer())
+        return self._start(writer, available_now, trigger_interval)

@@ -242,11 +242,13 @@ def test_versioned_commit_race_loses_atomically(spark, tmp_path):
     writer's read and its commit, the commit must fail AND the loser's
     orphaned data files must be cleaned up."""
     import glob
+    import json
     import os
 
     import pytest
 
     VT, table = _mk_vt(spark, tmp_path)
+    v0_schema = VT._read_manifest(table, 0)["schema"]
     # interpose: another writer commits version 1 while ours is writing
     orig_write = VT._write_data
 
@@ -261,10 +263,11 @@ def test_versioned_commit_race_loses_atomically(spark, tmp_path):
             os.makedirs(win_dir, exist_ok=True)
             os.makedirs(VT._manifest_dir(table_dir), exist_ok=True)
             with open(VT._manifest_path(table_dir, 1), "w") as fh:
-                fh.write(
-                    '{"version": 1, "data_dir": "%s", "n_rows": 3, '
-                    '"operation": "MERGE"}' % win_dir
-                )
+                json.dump({
+                    "version": 1, "data_dir": win_dir, "files": [],
+                    "n_rows": 0, "schema": v0_schema,
+                    "operation": "MERGE",
+                }, fh)
         return data_dir
 
     VT._write_data = racing_write
